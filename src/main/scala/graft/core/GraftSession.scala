@@ -36,11 +36,16 @@ object GraftSession {
   val ExcludedOptimizerRules: String =
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
-  /** Apply the engine's standard tuning to a builder. */
-  def tuned(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
-    b.config("spark.sql.optimizer.excludedRules", ExcludedOptimizerRules)
+  /** Local session — the only place the engine builds one. Entry points
+    * that need an extra conf (state-store provider, retention, probe
+    * overrides) set it with `spark.conf.set` on the returned session. */
+  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+    val s = SparkSession.builder().master(s"local[$cores]").appName("graft")
+      .config("spark.sql.warehouse.dir",
+        s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
+      .config("spark.sql.optimizer.excludedRules", ExcludedOptimizerRules)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.shuffle.partitions", math.max(cores, 4).toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -49,15 +54,7 @@ object GraftSession {
       // events.ts is ns-precision parquet; read as long, Tables.events converts
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-
-  /** Local session for tests / ad-hoc runs. */
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val s = tuned(
-      SparkSession.builder().master(s"local[$cores]").appName("graft")
-        .config("spark.sql.warehouse.dir",
-          s"${System.getProperty("java.io.tmpdir")}/graft-warehouse"),
-      math.max(cores, 4)
-    ).getOrCreate()
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // the compiled graft_* expressions are part of the engine surface —
     // any session from this factory can use them (idempotent)

@@ -20,7 +20,7 @@ object Analytic extends QueryModule {
       // group's buffer and sorts at evaluation — unbounded state at
       // corpus scale; the two-pass form is bounded (groups × bins) and
       // bit-identical (it replicates Percentile.getPercentile's
-      // interpolation exactly — QuantileProbe verifies head-to-head,
+      // interpolation exactly — tools/QuantileProbe @ 4061ee6 verified head-to-head,
       // 1.4-1.9 s vs 1.6-2.5 s warm at sf0.1)
       graft.operators.Quantiles.exactPercentiles(
           Tables.lineitem(s, d).select("l_returnflag", "l_extendedprice"),

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 
 /** Final-AQE plan corpus for the COMPLETE query inventory (VERDICT r10
   * item 5): PLANS.md covers the headline tail with annotated initial
@@ -46,16 +45,7 @@ object PlansFull {
     // `Scan ExistingRDD` at a pin, which otherwise hides the pinned
     // subtree's parquet scans from a reviewer (VERDICT r15 item 7)
     System.setProperty("graft.capturePinPlans", "true")
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.core.GraftSession.ExcludedOptimizerRules)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.local(16)
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder

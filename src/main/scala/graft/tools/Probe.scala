@@ -1,35 +1,26 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Ad-hoc plan/perf probe: runs named queries N times and prints timings
-  * + formatted plan. Usage: runMain graft.tools.Probe <sfDir> <n> <q>... */
+/** Ad-hoc plan/perf probe: runs named queries N times and prints timings.
+  * Usage: runMain graft.tools.Probe <sfDir> <n> <q>...
+  *   SPARK_GRAFT_CPUS  local cores (default 4, as Bench)
+  *   PROBE_CONF        "key=value;key=value" runtime SQL confs set on top
+  *                     of the factory session (rule exclusions, codegen knobs)
+  *   PROBE_STAGES      per-rep GC / spill / peak task memory, and the six
+  *                     heaviest stages of the last rep
+  *   PROBE_EXPLAIN     the formatted plan of each query */
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val n = args(1).toInt
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("PROBE_CPUS", "32")
-    // PROBE_CONF="key=value;key=value" — ad-hoc session confs for
-    // hypothesis probes (e.g. optimizer rule exclusions, codegen knobs)
-    val extra = sys.env.get("PROBE_CONF").toSeq
+    val spark = graft.core.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    sys.env.get("PROBE_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val b0 = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.optimizer.excludedRules",
-        graft.core.GraftSession.ExcludedOptimizerRules)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-    // extra confs LAST so a probe can override any default above
-    val spark = extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) }
     spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
 
+    val stageStats = sys.env.contains("PROBE_STAGES")
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, String)]()
     // per-rep telemetry for the r15 32-core cold-window investigation:
     // GC, spill and peak task memory accumulated across a rep's stages
@@ -55,15 +46,12 @@ object Probe {
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val dt = (System.nanoTime() - t0) / 1e9
-        if (sys.env.contains("PROBE_GC")) {
+        if (!stageStats) println(f"[probe] $name run$i $dt%.2f s")
+        else {
           Thread.sleep(300) // listener bus drain so the rep's totals are complete
           println(f"[probe] $name run$i $dt%.2f s gc=${gcMs.get}ms " +
             f"spill=${spillB.get / (1024 * 1024)}MB peakTaskMem=${peakMem.get / (1024 * 1024)}MB")
-        } else
-          println(f"[probe] $name run$i $dt%.2f s")
-        if (i == n && sys.env.contains("PROBE_STAGES")) {
-          Thread.sleep(400) // let the listener bus drain
-          stages.toArray(Array.empty[(Int, Long, Long, String)])
+          if (i == n) stages.toArray(Array.empty[(Int, Long, Long, String)])
             .sortBy(-_._2).take(6).foreach { case (id, rt, nt, nm) =>
               println(f"[stage] id=$id run=${rt}ms tasks=$nt $nm")
             }
