@@ -1,18 +1,21 @@
 #!/usr/bin/env python3
 """End-of-round gate sweep (VERDICT r12 item 6).
 
-Regenerates EVERY corpus-gate artifact from its committed script at the
-current HEAD, plus the two streaming gates (replay parity, eviction
-reclaim) and the bounded-state stream soak, so a round can never ship a
-query-semantics change with stale *CHECK.json evidence. Runs gates
-SEQUENTIALLY (each spins its own local Spark) and writes a one-line
-summary to GATESWEEP.json recording, per gate, the exit code and wall
-seconds. Exits non-zero if any gate failed.
+Regenerates EVERY corpus-gate artifact (`corpus_gate.py`, one run per
+GATES entry) at the current HEAD, plus the two streaming gates (replay
+parity, eviction reclaim) and the bounded-state stream soak, so a round
+can never ship a query-semantics change with stale *CHECK.json evidence.
+Runs gates SEQUENTIALLY (each spins its own local Spark) and writes a
+one-line summary to GATESWEEP.json recording, per gate, the exit code
+and wall seconds, plus the git head it ran at. Exits non-zero if any
+gate failed.
 
 Usage: python3 scripts/gate_sweep.py [--skip-streams]
   --skip-streams  corpus gates only (the streaming gates add ~3 min)
 """
 import json, subprocess, sys, time
+
+from corpus_gate import GATES, provenance
 
 REPO = "/root/repo"
 # generous vs the slowest recorded gate (UNICODECHECK ~18 min): a gate
@@ -20,20 +23,8 @@ REPO = "/root/repo"
 GATE_TIMEOUT_SEC = int(__import__("os").environ.get(
     "GRAFT_GATE_TIMEOUT_SEC", 3600))
 
-CORPUS_GATES = [
-    ("EMPTYCHECK",   [sys.executable, "scripts/empty_check.py"]),
-    ("SKEWCHECK",    [sys.executable, "scripts/skew_check.py"]),
-    ("UNICODECHECK", [sys.executable, "scripts/unicode_check.py"]),
-    ("JSONCHECK",    [sys.executable, "scripts/json_check.py"]),
-    ("VECCHECK",     [sys.executable, "scripts/vector_check.py"]),
-    ("NUMCHECK",     [sys.executable, "scripts/numeric_check.py"]),
-    ("TIMECHECK",    [sys.executable, "scripts/time_check.py"]),
-    ("DATECHECK",    [sys.executable, "scripts/date_check.py"]),
-    ("NULLCHECK",    [sys.executable, "scripts/null_check.py"]),
-    ("DUPCHECK",     [sys.executable, "scripts/dup_check.py"]),
-    ("RETYPECHECK",  [sys.executable, "scripts/retype_check.py"]),
-    ("LAYOUTCHECK",  [sys.executable, "scripts/layout_check.py"]),
-]
+CORPUS_GATES = [(name, [sys.executable, "scripts/corpus_gate.py", name])
+                for name in GATES]
 
 STREAM_GATES = [
     ("STREAMREPLAY", ["sbt", "-batch", "runMain graft.tools.StreamReplay"]),
@@ -90,7 +81,7 @@ def main():
               f"{'ok' if ok else ('TIMEOUT' if timed_out else 'FAIL')} "
               f"({dt}s)", flush=True)
     summary = {"gates": results, "n_fail": fail,
-               "all_ok": fail == 0}
+               "all_ok": fail == 0, **provenance()}
     with open(f"{REPO}/GATESWEEP.json", "w") as f:
         json.dump(summary, f, indent=1)
     print(f"[sweep] {len(gates) - fail}/{len(gates)} gates green "

@@ -687,9 +687,10 @@ object Similarity {
     // full-corpus assignment stays the dominant term. The training set
     // is DEFINED by id (`vec_id < cap`), never by count: an earlier cut
     // skipped the filter when COUNT(*) ≤ cap, silently assuming dense
-    // ids — the replay corpus gate (dup_check.py: same content re-landed
-    // under ids +10⁹) broke that assumption and diverged q82/q97 from
-    // the mirror, whose tre CTE always applies the predicate. The filter
+    // ids — the replay corpus gate (`corpus_gate.py DUPCHECK`: same
+    // content re-landed under ids +10⁹) broke that assumption and
+    // diverged q82/q97 from the mirror, whose tre CTE always applies the
+    // predicate. The filter
     // is a pushed-down scan predicate (free at gate SFs where every id
     // is below the cap, a read WIN at scale); the rule is integer-exact
     // from COUNT(*), mirrored by dkSemDedup's kk/tre CTEs. Fixed-k

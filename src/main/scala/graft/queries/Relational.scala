@@ -151,7 +151,7 @@ object Relational extends QueryModule {
     // emits NO rows over an empty relation — including the grand-total
     // row — while standard SQL (DuckDB) emits the () row with n = 0.
     // The engine's contract is Spark's (caught by
-    // scripts/empty_check.py); same pin on q09/q51.
+    // `scripts/corpus_gate.py EMPTYCHECK`); same pin on q09/q51.
     Q("q08_rollup", Some(s"""
       SELECT l_returnflag, l_linestatus,
         COUNT(*) AS n, ${sqlSum("l_quantity")} AS sum_qty
@@ -283,7 +283,7 @@ object Relational extends QueryModule {
     },
 
     // ---- P1/F7: JSON field projection with typed extraction ----
-    // Malformed-input contract (scripts/json_check.py): invalid JSON,
+    // Malformed-input contract (`corpus_gate.py JSONCHECK`): invalid JSON,
     // a non-numeric/overflowing/missing k, and non-object documents all
     // contribute NULL to the sum in BOTH engines. get_json_object NULLs
     // on truncated/garbage input (probed class-by-class — it does NOT
@@ -320,7 +320,7 @@ object Relational extends QueryModule {
       Tables.eventsProps(s, d)
         .filter(col("event_type").rlike("^(purchase|signup)$"))
         // no-match regexp_extract returns '' in both engines; try_cast
-        // keeps it NULL where an ANSI cast would throw (json_check gate)
+        // keeps it NULL where an ANSI cast would throw (JSONCHECK gate)
         .withColumn("k", regexp_extract(col("props"), "\"k\": (\\d+)", 1)
           .try_cast(org.apache.spark.sql.types.LongType))
         .groupBy(col("event_type"))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.streaming.{Event, EventWindows, StatefulOps}
 
 /** Streaming replay-parity gate (VERDICT r12 item 1) — the streaming twin
-  * of `scripts/dup_check.py`.
+  * of `scripts/corpus_gate.py DUPCHECK`.
   *
   * The twelve corpus gates all exercise the BATCH path; the replay axis
   * (at-least-once redelivery) found a real bug there (q82's
@@ -17,7 +17,7 @@ import graft.streaming.{Event, EventWindows, StatefulOps}
   * stateful streaming operators in production: a spool file re-landed
   * after a crashed ingest (the SAME row delivered again, key and all)
   * and a producer retry (same content under a FRESH primary key,
-  * original +10⁹ — the dup_check convention). This main drives each
+  * original +10⁹ — the DUPCHECK convention). This main drives each
   * bounded-state streaming op through a multi-batch stream where ~1/7 of
   * rows are re-delivered — half same-id, half fresh-id, each landing 1
   * batch after its original, plus a final replay-ONLY batch — and gates

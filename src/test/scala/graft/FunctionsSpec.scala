@@ -447,7 +447,7 @@ class FunctionsSpec extends SparkTestBase {
   }
 
   test("malformed-JSON parse contract: the semantics q18/q66 rely on, per pathology class") {
-    // Pins the SPARK behaviors the json_check gate's oracle mirrors were
+    // Pins the SPARK behaviors the JSONCHECK gate's oracle mirrors were
     // built against (each DuckDB-verified): from_json(map<string,string>)
     // is NULL for invalid/non-object input, keeps keys when one value is
     // wrong-typed, parses {} to an EMPTY (non-null) map, renders nested
